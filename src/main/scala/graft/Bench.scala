@@ -37,52 +37,6 @@ object Bench {
     // in the JSON host stamp below for dump provenance.
     val shuffleWidth = Engine.tuneForEstate(spark, sfDir)
     val errs = scala.collection.mutable.ArrayBuffer[String]()
-    // SPILL TELEMETRY (round-15 verdict task 8: g04's closure showed
-    // wall-clock alone misattributes one-box spill to plan defects —
-    // the α tables need "more work" separated from "same work,
-    // spilled"). A stage-metrics listener accumulates
-    // memory/disk-spill and peak-execution-memory; per-query deltas
-    // ride the JSON as `queries_spill` when SPARK_GRAFT_BENCH_SPILL=1.
-    // Gated because attribution needs a drain sleep per query
-    // (ListenerBus is async — the G04StageProbe discipline), which
-    // adds untimed wall a default sweep shouldn't pay.
-    val wantSpill = sys.env.get("SPARK_GRAFT_BENCH_SPILL").contains("1")
-    val memSpill = new java.util.concurrent.atomic.AtomicLong
-    val diskSpill = new java.util.concurrent.atomic.AtomicLong
-    val peakExec = new java.util.concurrent.atomic.AtomicLong
-    val stageEvents = new java.util.concurrent.atomic.AtomicLong
-    if (wantSpill)
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onStageCompleted(
-              sc: org.apache.spark.scheduler.SparkListenerStageCompleted)
-              : Unit = {
-            val m = sc.stageInfo.taskMetrics
-            if (m != null) {
-              memSpill.addAndGet(m.memoryBytesSpilled)
-              diskSpill.addAndGet(m.diskBytesSpilled)
-              peakExec.getAndAccumulate(m.peakExecutionMemory, math.max)
-            }
-            stageEvents.incrementAndGet()
-          }
-        })
-    // ListenerBus drain: the bus is async with no completion guarantee,
-    // so a fixed sleep can let a heavy query's late stage-completed
-    // events bleed into the NEXT query's spill entry (round-16
-    // advisory). Poll the event counter until it's been stable for
-    // 400 ms (3 s cap — attribution stays best-effort by nature, but a
-    // quiescent bus is a far stronger signal than one fixed nap).
-    def drainListenerBus(): Unit = {
-      val deadline = System.nanoTime() + 3000L * 1000000
-      var last = stageEvents.get
-      var stableSince = System.nanoTime()
-      while (System.nanoTime() < deadline &&
-          System.nanoTime() - stableSince < 400L * 1000000) {
-        Thread.sleep(50)
-        val now = stageEvents.get
-        if (now != last) { last = now; stableSince = System.nanoTime() }
-      }
-    }
     // Optional args: run only the named queries (profiling aid).
     val selected =
       if (args.isEmpty) SparkEntry.queries.toSeq
@@ -105,13 +59,7 @@ object Bench {
     // seconds run-to-run (measured 8–33 s for the same 9-stage LSH query,
     // ~4 s warm); min-of-2 reports the steady state a long-running
     // cluster job actually sees.
-    val spills =
-      scala.collection.mutable.LinkedHashMap[String, (Long, Long, Long)]()
     val results = selected.sortBy(_._1).map { case (name, fn) =>
-      if (wantSpill) { // drain the previous query's late stage events
-        drainListenerBus()
-        memSpill.set(0L); diskSpill.set(0L); peakExec.set(0L)
-      }
       def once(): Double =
         try {
           val t0 = System.nanoTime()
@@ -159,12 +107,6 @@ object Bench {
       // component labeling per query — see Engine.pinnedRDDs).
       Engine.sweepPersistentRDDs(spark)
       System.gc()
-      if (wantSpill) {
-        // totals across the query's runs (the cold run alone under
-        // SPARK_GRAFT_BENCH_RUNS=1 — the number the α tables want)
-        drainListenerBus()
-        spills(name) = (memSpill.get, diskSpill.get, peakExec.get)
-      }
       val best = (first, second) match {
         case (a, b) if a >= 0 && b >= 0 => math.min(a, b)
         case (a, b)                     => math.max(a, b) // the non-negative one, or -1
@@ -199,15 +141,9 @@ object Bench {
         s""""shuffle_width":$shuffleWidth,"record_grade":$recordGrade,""" +
         s""""load_start":$loadStart,"load_end":$loadEnd}"""
     }
-    val spillJson =
-      if (spills.isEmpty) ""
-      else spills.map { case (n, (m, dk, p)) =>
-        "\"" + n + s"""":{"spill_mb":${m >> 20},"disk_mb":${dk >> 20},""" +
-          s""""peak_exec_mb":${p >> 20}}"""
-      }.mkString("\"queries_spill\":{", ",", "},")
     val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
       s""""queries_cold":${jmap(_._3)},"queries_resumed":${jmap(_._4)},""" +
-      spillJson + s""""host":$host,"sf":"$sfDir"}"""
+      s""""host":$host,"sf":"$sfDir"}"""
     println(json)
     // Also persist the full line: the driver's BENCH capture truncates
     // its tail at 2000 chars, which loses per-query data for most of the
@@ -223,16 +159,18 @@ object Bench {
       // stamp makes every dump self-identifying AND keeps the record
       // convention intact without manual copying. An explicit
       // SPARK_GRAFT_BENCH_FILE still wins verbatim (profiling runs
-      // name their own artifact).
+      // name their own artifact). Paths are relative to the working
+      // directory: sbt's forked `run` starts in the project base, so a
+      // checkout's dumps land in its own `bench/`.
       val explicit = sys.env.get("SPARK_GRAFT_BENCH_FILE")
-      val stamped = "/root/repo/bench/run_%d_ls%.1f_le%.1f.json"
+      val stamped = "bench/run_%d_ls%.1f_le%.1f.json"
         .format(System.currentTimeMillis() / 1000, loadStart, loadEnd)
       // "latest = BEST-known": a record-grade run on a slow host DAY
       // (the box drifts 1.4–1.8× across incarnations, round 16) must
       // not clobber a faster record — only take the file when the new
       // total beats the standing one (or none stands).
       val beatsStanding = {
-        val f = java.nio.file.Paths.get("/root/repo/bench/latest_full.json")
+        val f = java.nio.file.Paths.get("bench/latest_full.json")
         !java.nio.file.Files.exists(f) || {
           val m = """"value":([0-9.eE+-]+)""".r
             .findFirstMatchIn(java.nio.file.Files.readString(f))
@@ -242,7 +180,7 @@ object Bench {
       val targets = explicit match {
         case Some(f) => Seq(f)
         case None if recordGrade && beatsStanding =>
-          Seq(stamped, "/root/repo/bench/latest_full.json")
+          Seq(stamped, "bench/latest_full.json")
         case None => Seq(stamped)
       }
       targets.foreach { t =>

@@ -49,7 +49,8 @@ object Engine {
     * (round-18 advisory): RDD ids restart from 0 in every new
     * SparkContext, so a bare id pinned by a stopped session would
     * silently exempt an UNRELATED RDD of a later session from the
-    * sweep. Scoping by applicationId makes a stale pin inert. */
+    * sweep. Scoping by applicationId makes a stale pin inert, and the
+    * sweep drops it. */
   val pinnedRDDs: java.util.Set[String] =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
@@ -59,9 +60,11 @@ object Engine {
 
   /** The ONE inter-query storage-hygiene sweep Bench and Verify run:
     * blocking-unpersist every persistent RDD EXCEPT the pinned
-    * shared-artifact checkpoints (see [[pinnedRDDs]]). */
+    * shared-artifact checkpoints (see [[pinnedRDDs]]), and forget the
+    * pins of other (stopped) contexts. */
   def sweepPersistentRDDs(spark: SparkSession): Unit = {
     val app = spark.sparkContext.applicationId
+    pinnedRDDs.removeIf(k => !k.startsWith(s"$app:"))
     spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
       if (!pinnedRDDs.contains(s"$app:$id")) rdd.unpersist(true)
     }

@@ -16,8 +16,7 @@ import org.apache.spark.sql.functions._
   * parents), so per-copy join fan-outs, selectivities and group
   * cardinalities are EXACTLY the base estate's and a measured exponent
   * isolates data volume. Two distinctness fixes stop copying from
-  * manufacturing quadratic artifacts the base estate doesn't have
-  * (the Q54GrowthProbe staging lesson):
+  * manufacturing quadratic artifacts the base estate doesn't have:
   *
   *  - `documents.text` gets a FIXED-WIDTH per-copy token prefix
   *    (`r<r> ` on every token — uniform 2-char prefix for r in 0..9):
@@ -129,8 +128,7 @@ object Sf1Stage {
             t => concat(lit(s"r$r"), t)), " "))
       .withColumn("n_chars", length(col("text"))))
     // embeddings: half-mix with the stride-rotated partner of the SAME
-    // copy's base index (deterministic, no RNG — the probe discipline;
-    // AnnStreamProbe carries the label-free twin — see Replicas.scala)
+    // copy's base index (deterministic, no RNG — the probe discipline)
     val emb = rd("embeddings")
     // The partner arithmetic below assumes vec_ids are EXACTLY the
     // contiguous range 0..nVecs-1; on an estate with gaps or a nonzero

@@ -67,9 +67,8 @@ object VectorFns {
     * bucket at ≤ `target` vectors. ANY constant target makes the
     * downstream work LINEAR in n (within-bucket pair work is
     * target·n/2; per-probe scan is `target` rows) — a FIXED width
-    * re-measures at α → 2 on the embedding-count axis
-    * ([[graft.examples.EmbCountProbe]]); the target only sets the
-    * constant factor, so each consumer picks the target its physical
+    * re-measures at α → 2 on the embedding-count axis; the target only
+    * sets the constant factor, so each consumer picks the target its physical
     * shape wants:
     *
     *  - d05/g02's ad-hoc blocking key uses target = 64 (tight pair

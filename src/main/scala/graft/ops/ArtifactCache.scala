@@ -86,16 +86,11 @@ final class ArtifactCache(bound: Int = 8) {
   // (or the ContextCleaner once the frame is unreachable) frees the
   // blocks.
 
-  /** Serve the artifact for `(s, d, tables-stamp)`, building (and
-    * localCheckpoint-materializing, and pinning) it on first touch,
-    * stale stamp, or dead checkpoint. The stamp listing and the build
-    * run outside the map lock; a per-key latch de-duplicates
-    * concurrent builds of the SAME artifact. */
-  def artifact(s: SparkSession, d: String, tables: Seq[String])(
-      build: => DataFrame): DataFrame = {
-    val stamp = stampOf(s, d, tables) // fs metadata, outside the lock
-    val key = (s, d, stamp)
-    val hit = cache.synchronized {
+  /** The live entry for `key`, refreshed to most-recently-used. Drops
+    * the same dataset's superseded stamps and a dead checkpoint. */
+  private def lookup(key: (SparkSession, String, String)): Option[DataFrame] = {
+    val (s, d, stamp) = key
+    cache.synchronized {
       cache.keys.filter(k => k._1 == s && k._2 == d && k._3 != stamp)
         .toSeq.foreach(k => cache.remove(k).foreach(unpin(s, _)))
       // remove-then-insert keeps the LinkedHashMap in access order, so
@@ -106,30 +101,50 @@ final class ArtifactCache(bound: Int = 8) {
         case None => None
       }
     }
-    hit.getOrElse {
+  }
+
+  /** Pin and insert a freshly built artifact, evicting past `bound`. */
+  private def insert(
+      key: (SparkSession, String, String), built: DataFrame): DataFrame =
+    cache.synchronized {
+      // an entry the put would displace must not keep its pin
+      cache.remove(key).foreach(unpin(key._1, _))
+      pin(key._1, built)
+      cache.put(key, built)
+      while (cache.size > bound) {
+        val (k, v) = cache.head
+        cache.remove(k)
+        unpin(k._1, v)
+      }
+      built
+    }
+
+  /** Serve the artifact for `(s, d, tables-stamp)`, building (and
+    * localCheckpoint-materializing, and pinning) it on first touch,
+    * stale stamp, or dead checkpoint. The stamp listing and the build
+    * run outside the map lock; a per-key latch de-duplicates
+    * concurrent builds of the SAME artifact. */
+  def artifact(s: SparkSession, d: String, tables: Seq[String])(
+      build: => DataFrame): DataFrame = {
+    val key = (s, d, stampOf(s, d, tables)) // fs metadata, outside the lock
+    var served = lookup(key)
+    while (served.isEmpty) {
       val latch = new java.util.concurrent.CountDownLatch(1)
       building.putIfAbsent(key, latch) match {
         case null => // this thread owns the build
           try {
-            val built = build.localCheckpoint()
-            cache.synchronized {
-              pin(s, built)
-              cache.put(key, built)
-              while (cache.size > bound) {
-                val (k, v) = cache.head
-                cache.remove(k)
-                unpin(k._1, v)
-              }
-            }
-            built
+            // a build that finished between the lookup above and
+            // winning the latch left its entry: serve it, don't rebuild
+            served = lookup(key).orElse(Some(insert(key, build.localCheckpoint())))
           } finally {
             building.remove(key)
             latch.countDown()
           }
         case other => // another thread is building: wait, then re-read
           other.await()
-          artifact(s, d, tables)(build)
+          served = lookup(key)
       }
     }
+    served.get
   }
 }

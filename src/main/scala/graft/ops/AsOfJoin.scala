@@ -78,7 +78,7 @@ object AsOfJoin {
     * columns (the composed form pads right rows to the left schema
     * plus the payload struct) and the window's frame buffering becomes
     * an O(1) forward-merge pointer (measured: ~0.9× shuffle bytes,
-    * ~1.7× faster join stages — [[graft.examples.AsOfProbe]]).
+    * ~1.7× faster join stages — BASELINE.md "Round-10 continuation").
     *
     * Output = all of `left`'s columns plus all of `right`'s columns
     * renamed `<rPrefix><name>` (all-null when no prior right row

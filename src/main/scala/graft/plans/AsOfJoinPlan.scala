@@ -39,7 +39,7 @@ import org.apache.spark.sql.types._
   * window's frame-buffering with a single forward-merge pointer per
   * partition — O(1) state, no frame materialization, no
   * `last(ignoreNulls)` scan over the frame. Measured at sf0.1
-  * ([[graft.examples.AsOfProbe]]): 0.85–0.90× the composed form's
+  * (BASELINE.md "Round-10 continuation"): 0.85–0.90× the composed form's
   * shuffle bytes at identical shuffled row counts (UnsafeRow nulls are
   * fixed-width, so schema-padding is cheaper than it looks; the byte
   * gap widens when the payload struct duplicates wide columns), and

@@ -533,7 +533,7 @@ object AnalyticsQueries {
     * hash never reaches output (both engines count overlapping DOCS and
     * the DuckDB oracle grams independently), so any injective-enough
     * token with the same equality relation is admissible — and
-    * P04StageProbe measured the md5-string build at 16× the xxhash64
+    * the md5-string build measured at 16× the xxhash64
     * one at sf1 (36.8 vs 2.2 s: one codegen'd 64-bit hash per gram
     * with no concat, and LONG tokens through array_distinct / explode /
     * the broadcast semi-join set instead of 32-hex-char strings).
@@ -1454,7 +1454,7 @@ object AnalyticsQueries {
       .orderBy("bucket")
 
   // ------------------------------------------------------------------
-  // DuckDB oracles (prototyped in tools/proto_analytics.py)
+  // DuckDB oracles
   // ------------------------------------------------------------------
 
   private val ow01 =

@@ -150,7 +150,7 @@ object ChunkQueries {
       |FROM x GROUP BY context_len ORDER BY context_len""".stripMargin
 
   // ------------------------------------------------------------------
-  // DuckDB oracles (prototyped in tools/proto_round5.py)
+  // DuckDB oracles
   // ------------------------------------------------------------------
 
   private val oc01 =

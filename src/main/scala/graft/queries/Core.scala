@@ -451,8 +451,8 @@ object Core {
     * rows to the left schema plus the payload struct), and the window's
     * per-key frame buffer becomes an O(1) merge pointer — measured
     * ~0.9× shuffle bytes / ~1.7× join-stage speed at sf0.1
-    * ([[graft.examples.AsOfProbe]]). Green against the IDENTICAL DuckDB
-    * `ASOF LEFT JOIN` oracle as q23 — one oracle, two plans, which is
+    * (BASELINE.md "Round-10 continuation"). Green against the
+    * IDENTICAL DuckDB `ASOF LEFT JOIN` oracle as q23 — one oracle, two plans, which is
     * the point: the operator changes the physical strategy, not the
     * answer. */
   private def j12(s: SparkSession, d: String): DataFrame = {
@@ -1028,10 +1028,10 @@ object Core {
     * micro-batches replay the event stream; each event expands to its
     * 3 panes map-side (the same Expand as batch), the state store
     * keeps one row per OPEN (pane, type) — bounded by panes inside the
-    * watermark horizon × |types|, never by event mass (the
-    * StreamMassProbe winagg axis measured: 10⁵ hot events → 2 state
-    * rows) — and append mode emits each pane exactly once when the
-    * watermark passes its end. TWO far-future sentinel batches flush
+    * watermark horizon × |types|, never by event mass (measured:
+    * 10⁵ hot events → 2 state rows) — and append mode emits each pane
+    * exactly once when the watermark passes its end. TWO far-future
+    * sentinel batches flush
     * the tail (a batch's watermark derives from the PREVIOUS batch's
     * max event time — the probe lesson now load-bearing in a query);
     * the read-back drops the sentinel panes and applies a15's exact
@@ -1122,7 +1122,7 @@ object Core {
     * index every N batches) — per-batch probe cost
     * stays O(batch keys × bucket occupancy) as the stream ages instead
     * of growing with the whole history
-    * ([[graft.examples.Q54GrowthProbe]] measures the contrast against
+    * (BASELINE.md "Round-12 measurements" gives the contrast against
     * the round-11 plain-append layout). Retry-idempotent WITHOUT
     * delete-first sinks: duplicate index rows cannot change a
     * min-aggregate and duplicate result rows collapse under the final
@@ -1156,9 +1156,8 @@ object Core {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // the per-batch step (exact-class collapse → pruned LSH probe
         // → append + periodic compaction) lives in NearDup.processBatch
-        // so the growth probe drives the IDENTICAL code over many more
-        // batches; tier semantics + the collapse-exactness proof are in
-        // the scaladoc above
+        // so q54b drives the IDENTICAL code; tier semantics + the
+        // collapse-exactness proof are in the scaladoc above
         graft.streaming.NearDup.processBatch(
           batch, batchId,
           resDir = resDir,
@@ -1366,8 +1365,8 @@ object Core {
   /** Q60b — STREAMING ANN UNDER THE PRODUCTION RE-BAND POLICY: q60's
     * dataflow with `reband = true`, so each size fold recomputes the
     * SRP band width at the width the CURRENT row count calls for (the
-    * capability AnnRebandSpec pins and ReBandProbe measures at 21×
-    * candidate-mass reduction — round-14 verdict task 8 asked for it
+    * capability AnnRebandSpec pins, measured at 21× candidate-mass
+    * reduction — round-14 verdict task 8 asked for it
     * under the CROSS-ENGINE oracle, which the declared q60 cannot do:
     * a mid-stream width flip is not one SQL bucket CTE).
     *
@@ -1379,8 +1378,8 @@ object Core {
     * target 7 — chosen so the test estates' counts STRADDLE a width
     * boundary mid-stream (sf0.001/0.01: 400→466 crosses 7·2⁶ = 448;
     * sf0.1: 1600→1866 crosses 7·2⁸ = 1792), because the whole point
-    * of the variant is an ORACLE-CHECKED width FLIP — at the
-    * ReBandProbe target of 64 the ~8%-per-batch growth never crosses
+    * of the variant is an ORACLE-CHECKED width FLIP — at a
+    * target of 64 the ~8%-per-batch growth never crosses
     * a power-of-two and the flip would go unexercised). The oracle is
     * PHASE-SPLIT: one width
     * per batch epoch derived with the same integer-shift SQL, each

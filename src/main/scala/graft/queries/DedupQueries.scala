@@ -98,10 +98,11 @@ object DedupQueries {
     * exact-dup mass defeats it: every copy of a template page carries an
     * identical MinHash signature, so all copies share every band key and
     * one bucket row holds |hot|×|shingles| payload before exploding
-    * |hot|² pairs, ×4 bands (the hazard [[graft.examples.HotBlockProbe]]
-    * measures). Hence the same [[PairBlockCap]] df-cap d04/d11 apply to
-    * fingerprint blocks rides the (band, bh) bucket here, BEFORE the
-    * collect; dropped mass is surfaced via the `d02_bucket_census`
+    * |hot|² pairs, ×4 bands (the hazard measured in BASELINE.md's
+    * "Round-7 measurements"). Hence the same [[PairBlockCap]] df-cap
+    * d04/d11 apply to fingerprint blocks rides the (band, bh) bucket
+    * here, BEFORE the collect; dropped mass is surfaced via the
+    * `d02_bucket_census`
     * observe and the DuckDB oracle applies the identical HAVING bound.
     * A capped-out bucket is exact-dup/template mass — d01/d12's signal,
     * not a near-dup pair listing's; cluster formation over that mass is
@@ -128,10 +129,10 @@ object DedupQueries {
     * either way), with the (band, bh) buckets df-capped at
     * [[PairBlockCap]] ([[capBlocks]] discipline — the signature table is
     * checkpointed first so the bucket census and the capped join read
-    * one materialization). `cap = None` is the probe-only uncapped
-    * hazard twin (always carry — it exists to measure the carry
-    * hazard). The CARRY vs JOIN-BACK choice is automatic — see
-    * [[chooseJoinBack]]; `forceShape` pins it for the A/B probe. */
+    * one materialization). `cap = None` is the uncapped hazard twin
+    * (always carry — it exists to measure the carry hazard; CompHotMassSpec
+    * drives it). The CARRY vs JOIN-BACK choice is automatic — see
+    * [[chooseJoinBack]]; `forceShape` pins it for SwitchSpec's A/B. */
   private[graft] def lshVerifiedPairs(
       s: SparkSession, d: String,
       cap: Option[Int] = Some(PairBlockCap),
@@ -157,16 +158,6 @@ object DedupQueries {
         capBlocks(bands, Seq("band", "bh"), "d02_bucket_census", cap))
     }
   }
-
-  /** d02's NARROW band stream — (doc_id, band, bh) with no carried
-    * payload — for census probes that need the full bucket-size
-    * DISTRIBUTION (the capBlocks observe reports only max + dropped
-    * mass). Shares [[sigWithSh]]/[[bandKeyCols]] so a probe census can
-    * never drift from the query's banding
-    * ([[graft.examples.D02StageProbe]]). */
-  private[graft] def d02BandsNarrow(s: SparkSession, d: String): DataFrame =
-    sigWithSh(s, d).select(
-      col("doc_id"), posexplode(array(bandKeyCols: _*)).as(Seq("band", "bh")))
 
   /** The JOIN-BACK spelling of [[lshVerifiedPairs]]'s tail over an
     * already-checkpointed (doc_id, sh, mh0..7) signature table — d07's
@@ -224,7 +215,7 @@ object DedupQueries {
     * payload ×4 (band fanout) through the bucket shuffle; join-back
     * ships it ≤2× (the two verification joins — 0× when the candidate
     * side broadcasts) plus fixed machinery (an extra exchange pair, a
-    * distinct, two joins). [[graft.examples.SwitchProbe]]'s 70×
+    * distinct, two joins). The measured 70×
     * payload sweep (2 KB → 146 KB/doc, planted verifying pairs):
     * 2 KB carry 1.48 vs jb 1.01 (machinery noise at tiny payloads),
     * 8.5 KB 1.23 vs 1.39, 35 KB 1.76 vs 2.03, 146 KB carry 5.36 vs
@@ -266,10 +257,10 @@ object DedupQueries {
   private val SwitchSampleRows = 2048
 
   /** Carried-payload cutoff (bytes/doc) above which [[chooseJoinBack]]
-    * picks the join-back shape — set at the point
-    * [[graft.examples.SwitchProbe]] measured the shapes LOCALLY
-    * neutral (see [[chooseJoinBack]]'s doc: above this, join-back is
-    * free locally and halves shuffle bytes on a real fabric). */
+    * picks the join-back shape — set at the point the payload sweep
+    * measured the shapes LOCALLY neutral (see [[chooseJoinBack]]'s doc:
+    * above this, join-back is free locally and halves shuffle bytes on a
+    * real fabric). */
   private[graft] val CarryShBytesCutoff = 8192.0
 
   private val switchLog =
@@ -536,8 +527,7 @@ object DedupQueries {
       .orderBy(col("jaccard").desc, col("da"), col("db"))
       .limit(20)
 
-  /** d04's capped pair stage ([[capBlocks]] discipline); `cap = None` is
-    * the probe-only uncapped twin — see [[d11Pairs]].
+  /** d04's capped pair stage ([[capBlocks]] discipline).
     *
     * HASHED-SHINGLE PAYLOAD (round-17 verdict task 2 — the d13
     * discipline applied here): the per-member shingle sets that ride
@@ -554,9 +544,7 @@ object DedupQueries {
     * collisions (the same vanishing exposure p04/g04/d13 already
     * accept and [[TextFns.hashedShinglesOf]] quantifies); the od04
     * oracle is unchanged. */
-  private[graft] def d04Pairs(
-      s: SparkSession, d: String,
-      cap: Option[Int] = Some(PairBlockCap)): DataFrame =
+  private[graft] def d04Pairs(s: SparkSession, d: String): DataFrame =
     capBlocks(
       tokenized(s, d)
         .filter(size(col("toks")) >= N)
@@ -569,7 +557,7 @@ object DedupQueries {
         // barrier the tokenize→fingerprint→shingle subtree runs twice
         // (measured +0.9 s at sf0.1, VERDICT r7 #2)
         .localCheckpoint(),
-      Seq("fp"), "d04_block_census", cap)
+      Seq("fp"), "d04_block_census", Some(PairBlockCap))
       .groupBy("fp")
       .agg(sort_array(collect_list(struct(col("doc_id").as("id"), col("sh").as("sh"))))
         .as("ms"))
@@ -602,12 +590,10 @@ object DedupQueries {
     * count is parquet-footer metadata, not a data scan) as the blocking
     * key, exact cosine within buckets, oriented va < vb. One definition
     * so the similarity graph and the near-dup report can never
-    * disagree. `forceBits` is the probe-only fixed-width hazard twin
-    * (the lshVerifiedPairs `cap = None` discipline). */
-  private[graft] def cosineEdges(s: SparkSession, d: String, tau: Double = 0.3,
-      forceBits: Option[Int] = None): DataFrame = {
-    val bits = forceBits.getOrElse(
-      adaptiveSrpBits(graft.sources.VectorIndex.corpusCount(s, d)))
+    * disagree. */
+  private[graft] def cosineEdges(
+      s: SparkSession, d: String, tau: Double = 0.3): DataFrame = {
+    val bits = adaptiveSrpBits(graft.sources.VectorIndex.corpusCount(s, d))
     val e = graft.Tables.rebalance(s, embeddings(s, d)).select(
       col("vec_id"),
       VectorFns.toDouble(col("embedding")).as("e"))
@@ -756,7 +742,7 @@ object DedupQueries {
     *
     * KEYSPACE IS THE SCALE BOUND, re-widened TWICE by measurement:
     * round 8 moved 16→60 signature bits (4 bands × 15 bits); round 15's
-    * [[graft.examples.D08BandCensusProbe]] caught THAT design
+    * band census caught THAT design
     * saturating at the second decade — at sf10 (500 k docs) 127,474 of
     * the 131,072 possible (band, value) keys were occupied, p99 bucket
     * 123 vs the 64-cap, 73% of candidate pair mass dropped, and the
@@ -766,9 +752,9 @@ object DedupQueries {
     * most 3 blocks, so ≥ 2 of 5 blocks agree, so the pair collides in
     * at least one of the C(5,2) = 10 tables. 10 × 2²⁴ keys ≈ 168 M —
     * a 24-bit agreement between random docs is ~6·10⁻⁸, so buckets
-    * stay sparse through sf100 and beyond (post-rewiden census, same
-    * probe: sf10 p99 bucket = 9 — FLAT across sf0.1/sf1/sf10 — and
-    * total candidate mass 9.9 M vs the old design's 60.7 M, with the
+    * stay sparse through sf100 and beyond (post-rewiden census: sf10
+    * p99 bucket = 9 — FLAT across sf0.1/sf1/sf10 — and total candidate mass
+    * 9.9 M vs the old design's 60.7 M, with the
     * dropped fraction down from 73% to 23%). Cost: 10 band rows per
     * doc instead of 4 — two longs each, linear, and the self-join they
     * feed shrinks 6× by the same sparsity. Exact-dup template mass
@@ -785,13 +771,11 @@ object DedupQueries {
       .limit(50)
 
   /** d08's banded + capped signature stage, split out so census readers
-    * (the cap spec, [[graft.examples.HotBlockProbe]]) can observe
+    * (the cap spec) can observe
     * `d08_band_census` on the stage it rides — [[d08Pairs]] checkpoints
     * this frame, which cuts the CollectMetrics out of the final query's
     * lineage. */
-  private[graft] def d08Banded(
-      s: SparkSession, d: String,
-      cap: Option[Int] = Some(PairBlockCap)): DataFrame = {
+  private[graft] def d08Banded(s: SparkSession, d: String): DataFrame = {
     // localCheckpoint: the census and the cap join would otherwise each
     // recompute the tokenize→hash60→simhash fold (lambda exprIds defeat
     // ReuseExchange — the d04/d07 lesson); the checkpointed table is two
@@ -818,20 +802,17 @@ object DedupQueries {
     // capBlocks' using-join reorders columns (join keys first) — pin the
     // order by NAME before the positional rename in d08Pairs, or da/sa
     // silently bind to the band key (caught by the sf0.01 oracle)
-    capBlocks(k, Seq("bk"), "d08_band_census", cap)
+    capBlocks(k, Seq("bk"), "d08_band_census", Some(PairBlockCap))
       .select("doc_id", "simhash", "bk")
   }
 
-  /** d08's capped pair stage ([[capBlocks]] discipline); `cap = None` is
-    * the probe-only uncapped twin — see [[d11Pairs]]. */
-  private[graft] def d08Pairs(
-      s: SparkSession, d: String,
-      cap: Option[Int] = Some(PairBlockCap)): DataFrame = {
+  /** d08's capped pair stage ([[capBlocks]] discipline). */
+  private[graft] def d08Pairs(s: SparkSession, d: String): DataFrame = {
     // second (narrow — 4 longs/row) checkpoint: BOTH self-join sides
     // read the capped band table from one materialization; without it
     // the census agg + cap equi-join execute once per side (seen as
     // three joins in the round-9 plan audit)
-    val capped = d08Banded(s, d, cap).localCheckpoint()
+    val capped = d08Banded(s, d).localCheckpoint()
     val a = capped.toDF("da", "sa", "ka")
     val b = capped.toDF("db", "sb", "kb")
     a.join(b, col("ka") === col("kb") && col("da") < col("db"))
@@ -1157,8 +1138,8 @@ object DedupQueries {
     * (surfaced, not silent — the d13 df≤20 / g04 ≤40-buyers discipline).
     * `keys` is the blocking key — the 16-byte fingerprint for d04/d11,
     * the (band, bh) LSH bucket for d02/d07. `cap = None` is the
-    * probe-only uncapped twin ([[graft.examples.HotBlockProbe]]) that
-    * demonstrates the hazard the cap removes. Callers checkpoint `base`'s
+    * uncapped twin that demonstrates the hazard the cap removes
+    * (BASELINE.md "Round-7 measurements"). Callers checkpoint `base`'s
     * lineage first: the size agg and the equi-join both read it, and
     * lambda exprIds defeat ReuseExchange (the round-2 lesson — an
     * unpinned base pays its projection twice, measured on d04 r7). */
@@ -1186,16 +1167,14 @@ object DedupQueries {
   /** d11's stage 1 — fingerprint, cap, pair-enumerate — split out so the
     * plan spec can assert the cap join's shape (the barrier in [[d11]]
     * hides this lineage from the final QueryExecution). */
-  private[graft] def d11Pairs(
-      s: SparkSession, d: String,
-      cap: Option[Int] = Some(PairBlockCap)): DataFrame = {
+  private[graft] def d11Pairs(s: SparkSession, d: String): DataFrame = {
     val base = tokenized(s, d)
       .select(
         col("doc_id"),
         TextFns.fingerprintOf(col("toks"), col("text"), N).as("fp"),
         col("text"))
       .localCheckpoint() // compute-once: block census + capped join read it
-    capBlocks(base, Seq("fp"), "d11_block_census", cap)
+    capBlocks(base, Seq("fp"), "d11_block_census", Some(PairBlockCap))
       .groupBy("fp")
       .agg(sort_array(collect_list(struct(col("doc_id").as("id"), col("text").as("tx"))))
         .as("ms"))
@@ -1301,9 +1280,9 @@ object DedupQueries {
     * df·(df−1)/2 pairs per shingle — pair volume stays linear in the
     * posting-list mass no matter how the corpus grows.
     *
-    * PLAN SHAPE (rewritten by the round-14 stage probe,
-    * D13StageProbe; payload-shrunk again in round 17 after the sf100
-    * receipt — α band 1.03–1.29, and the width-32 twin was KILLED at
+    * PLAN SHAPE (rewritten by the round-14 stage probe; payload-shrunk
+    * again in round 17 after the sf100 receipt — α band 1.03–1.29, and the
+    * width-32 twin was KILLED at
     * >45 GB of spill, `bench/r16_sf100_groupBC.json`): the shingle
     * stream crosses ONE exchange (`repartition`), the df census is a
     * window over the co-located key (no second exchange), and pair
@@ -1655,9 +1634,9 @@ object DedupQueries {
     val k = 8
     // filter(size >= k), NOT a when()-guarded empty-array fallback: the
     // CASE wrapper around the gram lambda measured 10× slower at sf0.1
-    // (2.9 s vs 0.3 s for the same explode — D19Probe variants A/C vs
-    // D/E; the conditional forces the transform out of the Generate's
-    // fused evaluation). Docs shorter than k have no grams and can
+    // (2.9 s vs 0.3 s for the same explode; the conditional forces the
+    // transform out of the Generate's fused evaluation). Docs shorter than
+    // k have no grams and can
     // never carry a redundant start, so the filter is also the exact
     // semantics. localCheckpoint: BOTH the per-hash aggregate and the
     // join-back probe side read g — unpinned, the lambda exprIds defeat
@@ -1951,27 +1930,18 @@ object DedupQueries {
     * object-init order can never interpolate a zero (the v24 trap). */
   private final val D17PanelBudget = 256
 
-  private def d17(s: SparkSession, d: String): DataFrame =
-    semanticDecontam(s, d, 97L, panelBudget = D17PanelBudget)
-
-  /** [[d17]]'s dataflow with the panel-membership modulus exposed —
-    * D17PanelProbe drives the SAME plan at ~11× panel size (mod 9) to
-    * measure the growth axis: the probed screen should scale with
-    * |panel| × bucket-hit-rate, the exact audit with |corpus|·|panel|
-    * (which is why the audit samples at scale). */
-  /** `panelBudget > 0` caps the benchmark panel at a FIXED query
-    * count — the `panelBudget` hash-rank-lowest members of the
-    * `% panelMod` slice (v24's `(id·40503+7) mod 104729` rank; ties by
-    * vec_id). Benchmarks are bounded by nature, but the synthetic
-    * `% 97` slice grows with the corpus, and the slice feeds BOTH the
-    * probe-key broadcast AND the exact-audit crossJoin — so an
-    * uncapped panel makes the audit (corpus/auditMod)×(corpus/97):
-    * α≈2/decade, the v24 shape. With the cap both paths are one
-    * corpus-linear pass against a fixed broadcast. 0 keeps the raw
-    * slice — D17PanelProbe's growth-axis measurement. */
-  private[graft] def semanticDecontam(
-      s: SparkSession, d: String, panelMod: Long,
-      auditMod: Long = 3L, panelBudget: Int = 0): DataFrame = {
+  /** The benchmark panel is capped at a FIXED query count — the
+    * [[D17PanelBudget]] hash-rank-lowest members of the `% 97` slice
+    * (v24's `(id·40503+7) mod 104729` rank; ties by vec_id).
+    * Benchmarks are bounded by nature, but the synthetic `% 97` slice
+    * grows with the corpus, and the slice feeds BOTH the probe-key
+    * broadcast AND the exact-audit crossJoin — so an uncapped panel
+    * makes the audit (corpus/auditMod)×(corpus/97): α≈2/decade, the
+    * v24 shape. With the cap both paths are one corpus-linear pass
+    * against a fixed broadcast. */
+  private def d17(s: SparkSession, d: String): DataFrame = {
+    val panelMod = 97L
+    val auditMod = 3L
     val bits = adaptiveSrpBits(graft.sources.VectorIndex.corpusCount(s, d))
     val b = graft.Tables.rebalance(s, embeddings(s, d))
       .select(col("vec_id"), col("label"),
@@ -1980,11 +1950,9 @@ object DedupQueries {
         VectorFns.norm(col("e")).as("nrm"),
         VectorFns.srpBucket(col("e"), bits).as("bucket"))
     val slice = b.filter(col("vec_id") % panelMod === 0)
-    val panel = (if (panelBudget > 0)
-        slice.withColumn("hk",
-            (col("vec_id") * lit(40503L) + lit(7L)) % lit(104729L))
-          .orderBy(col("hk"), col("vec_id")).limit(panelBudget)
-      else slice)
+    val panel = slice.withColumn("hk",
+        (col("vec_id") * lit(40503L) + lit(7L)) % lit(104729L))
+      .orderBy(col("hk"), col("vec_id")).limit(D17PanelBudget)
       .select(col("e").as("qe"), col("nrm").as("qn"), col("bucket").as("qb"))
     val corp = b.filter(col("vec_id") % panelMod =!= 0)
     val cosc = VectorFns.dot(col("e"), col("qe")) / (col("nrm") * col("qn"))

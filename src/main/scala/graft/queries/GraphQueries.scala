@@ -194,7 +194,7 @@ object GraphQueries {
     * emits each sorted (ca < cb) pair exactly once.
     *
     * THE PAIR STREAM CROSSES EXACTLY ONE EXCHANGE — its own
-    * aggregation, the operator's irreducible cost (G04StageProbe: pair
+    * aggregation, the operator's irreducible cost (measured: pair
     * mass is exactly linear, 84M → 840M across the decade, and the
     * bare aggregation ~103 s at sf10 against a 249 s full query). Two
     * rejected alternatives, both measured: shuffle-joining the
@@ -213,9 +213,7 @@ object GraphQueries {
     * ops on the ~collapsed output. Precondition, static on this data
     * model: custkeys are positive and < 2³¹ (TPC-H custkey ≈ 1.5M × SF
     * — fine beyond sf100; an estate past 2³¹ customers needs the
-    * 2-column key back). G04StageProbe measures both shapes
-    * back-to-back with a stage-metrics listener so the win is a
-    * spill/peak-memory receipt, not a narrative.
+    * 2-column key back).
     *
     * Degrees join as a SIZE-GATED BROADCAST: deg is a per-customer
     * aggregate — the customer DIM, 10²–10³× smaller than the pair

@@ -964,8 +964,8 @@ object TextQueries {
     * scale the ONLY change is `term` → `xxhash64(term) % 10⁴`, which
     * BOUNDS the feature table at 10⁴ rows instead of vocab-sized —
     * same plan, stronger guarantee. No longer just a claim: both
-    * halves are MEASURED on a staged 47.5k-term corpus by
-    * [[graft.examples.DsirHashProbe]] — feature table 47,500 → 9,919
+    * halves are MEASURED on a staged 47.5k-term corpus — feature table
+    * 47,500 → 9,919
     * rows, plan node-for-node equal, weight correlation 0.91 at
     * 4.75:1 collision load (0.98 at 1.4:1); the receipt's caveat is
     * that a literal top-k cut over near-tied weights IS
@@ -1130,17 +1130,7 @@ object TextQueries {
     * the final state as the ENCODER (a word's segmentation after
     * training IS its BPE encoding under the learned rules). */
   private def bpeTrain(
-      s: SparkSession, d: String): (Seq[DataFrame], DataFrame) =
-    bpeTrainRounds(s, d, 5)()
-
-  /** [[bpeTrain]] with the merge budget exposed, plus a per-round hook
-    * (the round-12 BpeRoundsProbe times each round through it — 5
-    * rounds is the oracle-checked surface, realistic tokenizer budgets
-    * are 10⁴⁺ and the probe pins that per-round cost stays flat). */
-  private[graft] def bpeTrainRounds(
-      s: SparkSession, d: String, rounds: Int)(
-      onRound: (Int, DataFrame) => Unit = (_, _) => ())
-      : (Seq[DataFrame], DataFrame) = {
+      s: SparkSession, d: String): (Seq[DataFrame], DataFrame) = {
     val sep = "~" // outside the corpus alphabet (a–y + space)
     val init = graft.Tables.rebalance(s, documents(s, d))
       .select(explode(TextFns.tokens(col("text"))).as("tok"))
@@ -1150,7 +1140,7 @@ object TextQueries {
           i => col("tok").substr(i, lit(1))), sep).as("sym"))
       .groupBy("sym").agg(count(lit(1)).as("cnt"))
     var vocab = init.localCheckpoint()
-    val merges = (1 to rounds).map { r =>
+    val merges = (1 to 5).map { r =>
       val pairs = vocab
         .select(col("cnt"), split(col("sym"), sep).as("ss"))
         .filter(size(col("ss")) >= 2)
@@ -1194,7 +1184,6 @@ object TextQueries {
             ).otherwise(concat(acc, lit(sep), x))).as("sym"),
           col("cnt"))
         .localCheckpoint()
-      onRound(r, vocab)
       top
     }
     (merges, vocab)

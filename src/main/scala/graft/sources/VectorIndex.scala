@@ -46,7 +46,7 @@ object VectorIndex {
     * with the corpus, so every probe's scan grows linearly too; the
     * adaptive width holds expected bucket occupancy at ≤ ~64 vectors
     * (measured on the ×30 estate: probed fraction 6.4% → 0.1% of the
-    * corpus, EmbCountProbe). Documentation-only: key builders take the
+    * corpus). Documentation-only: key builders take the
     * width EXPLICITLY (no default) so a caller can never silently probe
     * a 4-bit key against a wider partition layout. */
   val SrpBits = 4

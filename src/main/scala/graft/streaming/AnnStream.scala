@@ -41,8 +41,7 @@ import graft.functions.VectorFns
   * the seed width (`reband = false`): its DuckDB oracle must re-derive
   * one bucket function for the whole run, and a mid-stream width flip
   * is not expressible as a single SQL bucket CTE — the capability is
-  * exercised by AnnRebandSpec and the ReBandProbe growth axis
-  * instead.
+  * exercised by AnnRebandSpec instead.
   *
   * Partner rule — identical algebra to q58's, making the result
   * deterministic under any id-ordered batching and therefore

@@ -38,7 +38,7 @@ import org.apache.spark.sql.types.{LongType, StructType}
   *  A probe reads the base PRUNED to the touched buckets plus the
   *  delta in full — and the delta is SMALL by the fold trigger below,
   *  so probe cost ≈ |batch keys| × occupancy + |delta|, independent of
-  *  stream age (measured: [[graft.examples.Q54GrowthProbe]], against
+  *  stream age (measured: BASELINE.md "Round-12 measurements", against
   *  the round-11 full-scan layout whose probe grows linearly with
   *  history).
   *

@@ -11,8 +11,8 @@ import graft.functions.Num.oround
   * continuous, its index backed by [[BucketedIndex]] exactly as q54's
   * (the round-12 verdict's seed: one state-store format for every
   * foreachBatch state consumer). Factored out of the `foreachBatch`
-  * closure so the stream (q58) and [[graft.examples.D09StreamProbe]]
-  * drive the IDENTICAL code.
+  * closure so the stream (q58) and its variant (q58b) drive the
+  * IDENTICAL code.
   *
   * Per batch: the delta docs' band keys probe the index PRUNED to the
   * touched buckets (plan-asserted via [[BucketedIndex.lastProbePlan]]),

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -8,9 +7,8 @@ import org.apache.spark.sql.types.StructType
 import graft.functions.Num.oround
 
 /** The q54 streaming near-duplicate micro-batch step, factored out of
-  * the `foreachBatch` closure so the stream (q54) and the growth probe
-  * ([[graft.examples.Q54GrowthProbe]], which drives many more batches
-  * than the query stages) execute the IDENTICAL code. Semantics and
+  * the `foreachBatch` closure so the stream (q54) and its variant
+  * (q54b) execute the IDENTICAL code. Semantics and
   * the two-tier layering are documented at the q54 site
   * (`graft.queries.Core`); this object owns only the state layout:
   * both accumulated indexes live in [[BucketedIndex]] generations, so
@@ -18,11 +16,6 @@ import graft.functions.Num.oround
   * into (plan-asserted in PlanAssertionsSpec) and the per-batch
   * small-file appends fold into one re-bucketed generation under
   * [[BucketedIndex.maybeCompact]]'s size-ratio trigger.
-  *
-  * The `bucketed = false` path keeps the round-11 layout (plain
-  * parquet appends, the FULL accumulated index read back every batch)
-  * measurable — it exists for [[graft.examples.Q54GrowthProbe]]'s
-  * A/B contrast only; the stream always runs bucketed.
   */
 private[graft] object NearDup {
 
@@ -30,41 +23,6 @@ private[graft] object NearDup {
     "h STRING, rep_id LONG, rep_dup LONG, rep_jac DOUBLE")
   private val bandSchema = StructType.fromDDL(
     "doc_id LONG, sh ARRAY<STRING>, bk STRING")
-
-  /** The state-layout seam: the shipped bucket-pruned store vs the
-    * round-11 full-scan layout, so the growth probe can A/B the two
-    * under the otherwise-identical batch step. */
-  private sealed trait Store {
-    def probe(keys: DataFrame): Option[DataFrame]
-    def append(df: DataFrame): Unit
-    def maybeCompact(): Boolean
-    def compact(): Unit
-    def foldIncremental(): Unit
-  }
-
-  private final class Bucketed(ix: BucketedIndex) extends Store {
-    def probe(keys: DataFrame): Option[DataFrame] = ix.probe(keys)
-    def append(df: DataFrame): Unit = ix.append(df)
-    def maybeCompact(): Boolean = ix.maybeCompact()
-    def compact(): Unit = ix.compact()
-    def foldIncremental(): Unit = ix.foldIncremental()
-  }
-
-  /** Round-11 layout: plain appends, full-history read per batch, no
-    * compaction. Existence via the Hadoop FileSystem (the one layout
-    * fix that applies to it too). */
-  private final class Plain(
-      s: SparkSession, root: String, schema: StructType) extends Store {
-    private val path = new Path(root)
-    private def fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
-    def probe(keys: DataFrame): Option[DataFrame] =
-      if (fs.exists(path)) Some(s.read.schema(schema).parquet(root)) else None
-    def append(df: DataFrame): Unit =
-      df.write.mode("append").parquet(root)
-    def maybeCompact(): Boolean = false
-    def compact(): Unit = () // plain layout has no generations to fold
-    def foldIncremental(): Unit = ()
-  }
 
   def bandIndex(
       s: SparkSession, root: String,
@@ -82,8 +40,8 @@ private[graft] object NearDup {
     * apply), while q54's oracle is the UNCAPPED closure — this cap
     * exists only to bound farm mass, so it is sized by the measured
     * separation between adversarial template farms (bucket membership
-    * 479/960/1,998 at 500/1k/2k perturbed copies,
-    * Q54AdversarialProbe) and GENUINE near-dup families (tens; the
+    * 479/960/1,998 at 500/1k/2k perturbed copies, BASELINE.md
+    * "sf1 DuckDB cross-check") and GENUINE near-dup families (tens; the
     * largest real family bucket seen on any staged estate is 76, at
     * sf1 — which a 64 cap wrongly dropped, the round-13 sf1 sweep's
     * one row of divergence). 256 keeps every measured genuine family
@@ -96,25 +54,15 @@ private[graft] object NearDup {
     * append + index append, size-triggered compaction. Writes are
     * append-only and the readers duplicate-immune (min-aggregates /
     * final distinct), so a replayed batch is harmless — the q46
-    * idempotence contract met by algebra. Returns whether either
-    * index compacted this batch (probe bookkeeping). */
+    * idempotence contract met by algebra. */
   def processBatch(
       batch: DataFrame, batchId: Long,
       resDir: String, bandRoot: String, exactRoot: String,
       targetRowsPerBucket: Long = 4096L, minBuckets: Int = 16,
-      bucketed: Boolean = true,
-      bandCap: Option[Int] = Some(StreamBandCap),
-      forceCompact: Boolean = false)
-      : Boolean = {
+      forceCompact: Boolean = false): Unit = {
     val bs = batch.sparkSession
-    val exIdxStore: Store =
-      if (bucketed)
-        new Bucketed(exactIndex(bs, exactRoot, targetRowsPerBucket, minBuckets))
-      else new Plain(bs, exactRoot, exactSchema)
-    val bandStore: Store =
-      if (bucketed)
-        new Bucketed(bandIndex(bs, bandRoot, targetRowsPerBucket, minBuckets))
-      else new Plain(bs, bandRoot, bandSchema)
+    val exIdxStore = exactIndex(bs, exactRoot, targetRowsPerBucket, minBuckets)
+    val bandStore = bandIndex(bs, bandRoot, targetRowsPerBucket, minBuckets)
     // ---- EXACT tier first (the measured scale guard: 2,000 template
     // copies took the single-tier band join from 7.5 s to 377 s at
     // sf0.1 — |copies|² pairs per band; collapsing each text-hash
@@ -156,16 +104,16 @@ private[graft] object NearDup {
       case Some(hist) => bands.unionByName(hist.select("doc_id", "sh", "bk"))
       case None       => bands
     }
-    // THE CAPPED STREAMING POLICY (round-12 verdict item 4, probed by
-    // Q54AdversarialProbe): the exact tier collapses BYTE-EQUAL copies,
-    // but a template farm with per-copy PERTURBATIONS defeats it — every
+    // THE CAPPED STREAMING POLICY (round-12 verdict item 4): the exact
+    // tier collapses BYTE-EQUAL copies, but a template farm with per-copy
+    // PERTURBATIONS defeats it — every
     // copy is its own exact class, all 2,000 reps share most band keys,
     // and the in-batch join explodes |copies|² pairs a stream cannot
     // df-cap after the fact (quadratic in the farm size — measured on
-    // the copy-count axis in Q54AdversarialProbe; capped, the same
-    // batches run flat). So the d02 discipline rides
+    // the copy-count axis; capped, the same batches run flat, BASELINE.md
+    // "sf1 DuckDB cross-check"). So the d02 discipline rides
     // the probe union: band keys whose membership (batch reps +
-    // accumulated index) exceeds `bandCap` are EXCLUDED from pair
+    // accumulated index) exceeds `StreamBandCap` are EXCLUDED from pair
     // enumeration, and the drop is SURFACED (a census row appended to
     // `<resDir>_capcensus` whenever anything drops — never silent).
     // EXACTNESS TRADEOFF, stated plainly: a capped-out key contributes
@@ -176,29 +124,27 @@ private[graft] object NearDup {
     // oracle — q54's contract, green at all three SFs with the cap
     // active. rhs is checkpointed: the census sizes aggregate and the
     // pair join are two consumers of the probe union.
-    val rhs = bandCap match {
-      case None => rhs0
-      case Some(cap) =>
-        val ck = rhs0.localCheckpoint()
-        // countDistinct, not count(*): during the compaction crash
-        // window BOTH index generations are visible until the next
-        // fold, so a raw row count double-counts every member and
-        // could push a genuine family past the cap — the census must
-        // be duplicate-immune like the pair algebra it guards.
-        val sizes = ck.groupBy("bk").agg(countDistinct("doc_id").as("bn"))
-          .localCheckpoint()
-        val hot = sizes.filter(col("bn") > cap)
-          .agg(count(lit(1)).as("hot_keys"), max("bn").as("max_bucket"),
-            sum(col("bn") * (col("bn") - 1)).as("dropped_pair_bound2x"))
-          .head()
-        if (hot.getLong(0) > 0)
-          bs.range(1).select(
-            lit(batchId).as("batch_id"),
-            lit(hot.getLong(0)).as("hot_keys"),
-            lit(hot.getLong(1)).as("max_bucket"),
-            lit(hot.getLong(2) / 2).as("dropped_pair_bound"))
-            .write.mode("append").parquet(resDir + "_capcensus")
-        ck.join(sizes.filter(col("bn") <= cap).select("bk"), "bk")
+    val rhs = {
+      val ck = rhs0.localCheckpoint()
+      // countDistinct, not count(*): during the compaction crash
+      // window BOTH index generations are visible until the next
+      // fold, so a raw row count double-counts every member and
+      // could push a genuine family past the cap — the census must
+      // be duplicate-immune like the pair algebra it guards.
+      val sizes = ck.groupBy("bk").agg(countDistinct("doc_id").as("bn"))
+        .localCheckpoint()
+      val hot = sizes.filter(col("bn") > StreamBandCap)
+        .agg(count(lit(1)).as("hot_keys"), max("bn").as("max_bucket"),
+          sum(col("bn") * (col("bn") - 1)).as("dropped_pair_bound2x"))
+        .head()
+      if (hot.getLong(0) > 0)
+        bs.range(1).select(
+          lit(batchId).as("batch_id"),
+          lit(hot.getLong(0)).as("hot_keys"),
+          lit(hot.getLong(1)).as("max_bucket"),
+          lit(hot.getLong(2) / 2).as("dropped_pair_bound"))
+          .write.mode("append").parquet(resDir + "_capcensus")
+      ck.join(sizes.filter(col("bn") <= StreamBandCap).select("bk"), "bk")
     }
     val lsh = bands
       .select(col("bk"), col("doc_id").as("new_id"), col("sh").as("shn"))
@@ -241,11 +187,9 @@ private[graft] object NearDup {
     // own delta and the big base merges on the geometric ratio —
     // results unchanged (see BucketedIndex.foldIncremental).
     if (forceCompact) {
-      bandStore.foldIncremental(); exIdxStore.foldIncremental(); true
+      bandStore.foldIncremental(); exIdxStore.foldIncremental()
     } else {
-      val c1 = bandStore.maybeCompact()
-      val c2 = exIdxStore.maybeCompact()
-      c1 || c2
+      bandStore.maybeCompact(); exIdxStore.maybeCompact()
     }
   }
 }

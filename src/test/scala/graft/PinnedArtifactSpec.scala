@@ -49,8 +49,14 @@ class PinnedArtifactSpec extends AnyFunSuite
     assert(Engine.pinnedRDDs.contains(Engine.pinKey(spark, artId)),
       "artifact must be pinned")
     assert(!Engine.pinnedRDDs.contains(Engine.pinKey(spark, plainId)))
+    // a pin left by a stopped context (RDD ids restart per context)
+    val stale = s"stale-${spark.sparkContext.applicationId}:$artId"
+    Engine.pinnedRDDs.add(stale)
 
     Engine.sweepPersistentRDDs(spark)
+
+    assert(!Engine.pinnedRDDs.contains(stale),
+      "the sweep must drop another context's pins")
 
     assert(!spark.sparkContext.getPersistentRDDs.contains(plainId),
       "unpinned checkpoint must be swept")
@@ -85,6 +91,53 @@ class PinnedArtifactSpec extends AnyFunSuite
       "retired artifact must be releasable by the sweep")
     Engine.pinnedRDDs.remove(Engine.pinKey(spark, bId))
     Engine.sweepPersistentRDDs(spark)
+  }
+
+  test("two threads requesting one artifact build it once and leave one pin") {
+    import spark.implicits._
+    import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+    val cache = new graft.ops.ArtifactCache()
+    val builds = new java.util.concurrent.atomic.AtomicInteger
+    val secondMissed, firstDone = new CountDownLatch(1)
+    val served = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
+    def request(): Unit =
+      try {
+        served.add(cache.artifact(spark, sf, Seq("documents.parquet")) {
+          builds.incrementAndGet()
+          secondMissed.await(60, TimeUnit.SECONDS)
+          Seq(7, 8).toDF("z")
+        })
+      } catch { case e: Throwable => errors.add(e) }
+    val first = new Thread(() => { request(); firstDone.countDown() })
+    val second = new Thread(() => request())
+    // Force the interleaving a free-running race hits only rarely: the
+    // second thread misses the map lookup while the first is building,
+    // then reaches the per-key build latch only after the first build
+    // has finished and released it.
+    val latchField = classOf[graft.ops.ArtifactCache].getDeclaredFields
+      .find(_.getType == classOf[ConcurrentHashMap[_, _]]).get
+    latchField.setAccessible(true)
+    latchField.set(cache, new ConcurrentHashMap[AnyRef, CountDownLatch] {
+      override def putIfAbsent(k: AnyRef, v: CountDownLatch): CountDownLatch = {
+        if (Thread.currentThread eq second) {
+          secondMissed.countDown()
+          firstDone.await(60, TimeUnit.SECONDS)
+        }
+        super.putIfAbsent(k, v)
+      }
+    })
+    val pinsBefore = Engine.pinnedRDDs.size
+    first.start(); second.start()
+    first.join(120000); second.join(120000)
+    assert(errors.isEmpty, errors)
+    assert(served.size == 2)
+    assert(builds.get == 1, "the artifact must be built once")
+    assert(Engine.pinnedRDDs.size - pinsBefore == 1,
+      "exactly one pin must be left for the one artifact")
+    val art = served.peek()
+    assert(Engine.pinnedRDDs.contains(Engine.pinKey(spark, rddIdOf(art))))
+    Engine.pinnedRDDs.remove(Engine.pinKey(spark, rddIdOf(art)))
   }
 
   test("d06/d14/p14 component labels survive the sweep and stay correct") {
